@@ -7,19 +7,24 @@ never a global cross join):
 - ngram-jaccard— exact char-3-gram Jaccard via array higher-order functions
                  (JVM-side), pairs blocked by a cheap key
 - MinHash+LSH  — Arrow-batched signature UDF → band explode → bucket
-                 self-join → signature-similarity filter (classic
-                 shingle→minhash→band→bucket-join)
+                 self-join → Arrow-batched signature-agreement verify
+                 (classic shingle→minhash→band→bucket-join)
 - SimHash      — Arrow-batched 64-bit SimHash → 16-bit band blocking →
                  xor+bit_count Hamming verify (pure column expressions)
 - embedding    — cosine near-dup via sign-LSH bucketing + exact cosine verify
 
 All candidate joins are equi joins on block keys → AQE-skew-splittable.
+``cluster_pairs`` turns any pair set into connected components
+(contraction per partition, then a driver union-find or label propagation).
 """
 
 from __future__ import annotations
 
+from typing import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -225,7 +230,13 @@ def minhash_lsh_pairs(
 
     Pipeline: signature UDF → band explode (band hash = xxhash64 of the band
     slice) → bucket self-join → distinct pairs → signature-agreement
-    estimate filter.  Only the signature computation touches Python.
+    estimate filter.  Two steps run in Python, both on Arrow batches: the
+    signature UDF, and the verify kernel, which compares whole batches of
+    signature pairs in numpy instead of per-row array lambdas (Spark
+    interprets those one element at a time).  est_jaccard is the count of
+    equal signature positions over ``num_hashes``.  An in-flight verify
+    batch holds both signatures of every pair in it: 16·num_hashes bytes a
+    pair, up to ``spark.sql.execution.arrow.maxRecordsPerBatch`` pairs.
     """
     rows_per_band = num_hashes // bands
     sigs = with_minhash(docs, num_hashes, seed=seed, id_col=id_col, text_col=text_col).select(
@@ -267,20 +278,39 @@ def minhash_lsh_pairs(
             ),
             "id_b",
         )
+        .select("id_a", "id_b", "sig_a", "sig_b")
     )
-    est = (
-        F.aggregate(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        )
-        / F.lit(num_hashes)
+    out_schema = T.StructType(
+        cand.schema.fields[:2] + [T.StructField("est_jaccard", T.DoubleType())]
     )
-    return (
-        cand.withColumn("est_jaccard", est.cast("double"))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
+    return cand.mapInArrow(_verify_kernel(num_hashes, threshold), out_schema)
+
+
+def _verify_kernel(num_hashes: int, threshold: float):
+    """Arrow kernel: (id_a, id_b, sig_a, sig_b) batches → pairs whose
+    signature agreement ``(a == b).sum() / num_hashes`` is ≥ threshold.
+
+    Each signature column's flat child (``flatten`` honours slice offsets)
+    reshapes to ``(rows, num_hashes)``, so one numpy comparison checks a
+    whole batch; batches stream through one at a time.  Same integer count
+    over the same divisor as a per-element sum, so the estimate is
+    bit-identical to it.
+    """
+
+    def _verify(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            sig_a, sig_b = (
+                rb.column(i).flatten().to_numpy().reshape(-1, num_hashes) for i in (2, 3)
+            )
+            est = (sig_a == sig_b).sum(axis=1) / num_hashes
+            keep = est >= threshold
+            mask = pa.array(keep)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0).filter(mask), rb.column(1).filter(mask), pa.array(est[keep])],
+                ["id_a", "id_b", "est_jaccard"],
+            )
+
+    return _verify
 
 
 def simhash_pairs(
@@ -339,6 +369,41 @@ def simhash_pairs(
 SMALL_GRAPH_EDGE_LIMIT = 100_000  # bounded driver collect: ≤ ~1.6 MB of ids
 
 
+def _contract_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Arrow kernel: one partition's (a, b) pairs → one (node, component
+    min) row per distinct node it holds.
+
+    Min-label hooking with pointer jumping over node ranks (the sorted
+    unique ids, so the min rank is the min id): each round hooks every
+    cross edge's larger root onto its smaller one, then jumps pointers
+    until each node points at its root.  Labels only decrease, so the loop
+    ends; a near-dup clique settles in one round.  The partition's batches
+    are concatenated — its components can span them.
+    """
+    parts = [(rb.column(0).to_numpy(), rb.column(1).to_numpy()) for rb in batches]
+    if not parts:
+        return
+    nodes, inv = np.unique(
+        np.concatenate([a for a, _ in parts] + [b for _, b in parts]), return_inverse=True
+    )
+    ia, ib = np.split(inv, 2)
+    label = np.arange(nodes.size)
+    while True:
+        ra, rb = label[ia], label[ib]
+        cross = ra != rb
+        if not cross.any():
+            break
+        np.minimum.at(label, np.maximum(ra[cross], rb[cross]), np.minimum(ra[cross], rb[cross]))
+        while True:
+            jumped = label[label]
+            if (jumped == label).all():
+                break
+            label = jumped
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(nodes), pa.array(nodes[label])], ["a", "b"]
+    )
+
+
 def cluster_pairs(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -347,30 +412,31 @@ def cluster_pairs(
 ) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, cluster_id).
 
-    Label propagation: every node starts labeled with itself; each round each
-    node takes the min label among itself and its neighbors; stop at
-    fixpoint.  Converges in O(diameter) rounds — near-dup clusters are
-    shallow (dups of dups), so a handful of rounds suffices at any scale.
-    The driver loop iterates over rounds, never rows; each round is one
-    groupBy over the (small relative to corpus) pair set.
-
-    Small-graph fast path: when the (materialized) edge set fits a bounded
-    probe (``SMALL_GRAPH_EDGE_LIMIT`` rows, checked with ``limit(n+1)`` —
-    never an unbounded collect), connected components run as a driver-side
-    union-find instead of 5-10 tiny Spark rounds whose cost is pure
-    job-scheduling overhead.  Identical output (labels are
-    min-id-per-component either way); the iterative path is unchanged for
-    graphs beyond the probe.
-
     cluster_id = min doc id in the component (the canonical "keeper").
+
+    Contraction first: one ``mapInArrow`` pass finds each input partition's
+    connected components in numpy and emits one ``(node, partition-local
+    min)`` row for every node it sees, roots included (a self-pair
+    ``(a, a)`` yields ``(a, a)``).  Every pair's two ends share a local
+    component, so this star forest has the same connectivity and the same
+    min-id labels as the pairs, while its row count is bounded by Σ over
+    partitions of distinct nodes — near-dup cliques of m members shrink
+    from m(m-1)/2 pairs to m rows.
+
+    The contracted rows then go through a bounded probe
+    (``SMALL_GRAPH_EDGE_LIMIT`` rows, checked with ``limit(n+1)`` — never
+    an unbounded collect).  When they fit, a driver-side union-find labels
+    them.  Only when the contracted graph is still larger does distributed
+    label propagation run over it: every node starts labeled with itself;
+    each round each node takes the min label among itself, its neighbors
+    and its label's label (pointer doubling); stop at fixpoint, in
+    O(log diameter) rounds.  The driver loop iterates over rounds, never
+    rows.
     """
-    edges = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .unionByName(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    probe = edges.limit(SMALL_GRAPH_EDGE_LIMIT + 1).collect()
+    contracted = pairs.select(
+        F.col(id_a).cast("long").alias("a"), F.col(id_b).cast("long").alias("b")
+    ).mapInArrow(_contract_partition, "a long, b long")
+    probe = contracted.limit(SMALL_GRAPH_EDGE_LIMIT + 1).collect()
     if len(probe) <= SMALL_GRAPH_EDGE_LIMIT:
         parent: dict = {}
 
@@ -394,6 +460,10 @@ def cluster_pairs(
         return spark.createDataFrame(
             out or [], "doc_id long, cluster_id long"
         )
+    # materialize the star edges once for the rounds to share; label
+    # propagation reads neighbors through edge "a", so it sees both directions
+    star = contracted.localCheckpoint(eager=True)
+    edges = star.unionByName(star.select(F.col("b").alias("a"), F.col("a").alias("b")))
     labels = (
         edges.select(F.col("a").alias("node"))
         .distinct()

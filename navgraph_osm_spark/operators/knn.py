@@ -141,6 +141,11 @@ def knn_join_adaptive(
         # entirely: it stays in ``remaining`` (complete never matches it)
         # and lands in the exact brute-force fallback, which is where it
         # was headed anyway.  Results are identical — both paths are exact.
+        # Once the ring alone reaches the pole (coarse res) that holds for
+        # every query, so the remaining rounds would only schedule empty
+        # jobs: go straight to the fallback.
+        if (cur_ring + 1) * lat_extent_deg >= 90.0:
+            break
         certifiable = (
             F.abs(F.col("lat")) + F.lit((cur_ring + 1.0) * lat_extent_deg)
         ) < F.lit(90.0)

@@ -583,7 +583,7 @@ def parse_primitive_block_ref(data: bytes) -> dict:
                 node_ids.append(np.array([nid], dtype=np.int64))
                 node_lats.append(conv(np.array([rlat]), lat_offset))
                 node_lngs.append(conv(np.array([rlng]), lon_offset))
-                t = _tags_of(keys, vals, strings)
+                t = _tags_of(keys, vals, strings, f"node {nid}")
                 node_tags.append([t] if t else [None])
             elif fnum == 3 and wt == 2:  # Way
                 wid = 0
@@ -598,7 +598,9 @@ def parse_primitive_block_ref(data: bytes) -> dict:
                     elif df_ == 8:
                         rc.append(_signed_packed(data, dwt, dval))
                 refs = np.cumsum(_cat(rc)) if rc else np.empty(0, np.int64)
-                ways.append((wid, _tags_of(_cat(kc), _cat(vc), strings), refs))
+                ways.append(
+                    (wid, _tags_of(_cat(kc), _cat(vc), strings, f"way {wid}"), refs)
+                )
             elif fnum == 4 and wt == 2:  # Relation
                 rid = 0
                 kc, vc, rlc, mc, tc = [], [], [], [], []
@@ -619,7 +621,7 @@ def parse_primitive_block_ref(data: bytes) -> dict:
                 relations.append(
                     (
                         rid,
-                        _tags_of(_cat(kc), _cat(vc), strings),
+                        _tags_of(_cat(kc), _cat(vc), strings, f"relation {rid}"),
                         [strings[int(r)] for r in roles],
                         np.cumsum(_cat(mc)) if mc else np.empty(0, np.int64),
                         _cat(tc) if tc else np.empty(0, np.int64),
@@ -635,8 +637,15 @@ def parse_primitive_block_ref(data: bytes) -> dict:
     return {"nodes": nodes, "ways": ways, "relations": relations}
 
 
-def _tags_of(keys, vals, strings: list[str]) -> dict[str, str]:
-    if keys is None or vals is None:
+def _tags_of(keys, vals, strings: list[str], entity: str) -> dict[str, str]:
+    """Parallel key/value string-table indices → tag dict; arrays of
+    different lengths are malformed input and raise instead of dropping
+    the unpaired tags."""
+    n_keys = 0 if keys is None else len(keys)
+    n_vals = 0 if vals is None else len(vals)
+    if n_keys != n_vals:
+        raise ValueError(f"{entity}: {n_keys} tag keys but {n_vals} values")
+    if not n_keys:
         return {}
     return {strings[int(k)]: strings[int(v)] for k, v in zip(keys, vals)}
 
@@ -820,8 +829,9 @@ def parse_primitive_block_flat(data: bytes) -> dict:
 
     Falls back to :func:`parse_primitive_block_ref` (then flattens) when a
     blob uses irregular encodings: non-packed repeated scalars in
-    Way/Relation messages, mismatched parallel arrays, or keys_vals streams
-    the vectorized splitter cannot prove unambiguous.
+    Way/Relation messages, mismatched parallel arrays (tag keys/values of
+    different lengths then raise ``ValueError`` there), or keys_vals
+    streams the vectorized splitter cannot prove unambiguous.
     """
     strings: list[str] = []
     groups: list[tuple[int, int]] = []
@@ -916,10 +926,11 @@ def parse_primitive_block_flat(data: bytes) -> dict:
                 nlng_c.append(conv(np.array([rlng]), lon_offset))
                 k = keys.astype(np.int64) if keys is not None else np.empty(0, np.int64)
                 v = vals.astype(np.int64) if vals is not None else np.empty(0, np.int64)
-                m = min(k.size, v.size)
-                ntagc_c.append(np.array([m], np.int64))
-                nkey_c.append(k[:m])
-                nval_c.append(v[:m])
+                if k.size != v.size:  # mismatched tags → the walk raises
+                    return _fallback()
+                ntagc_c.append(np.array([k.size], np.int64))
+                nkey_c.append(k)
+                nval_c.append(v)
             elif fnum == 3 and wt == 2:  # Way — record slices only
                 widx = len(way_ids)
                 wid = 0

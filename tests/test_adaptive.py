@@ -39,6 +39,37 @@ def test_adaptive_knn_exact_vs_bruteforce(spark, clustered_points):
     np.testing.assert_allclose(g["dist_km"], w["dist_km"], rtol=1e-9)
 
 
+def test_adaptive_knn_coarse_res_skips_ring_rounds(spark, clustered_points):
+    """At res 2 a cell spans 45° of latitude, so a ring-1 disk already
+    reaches the pole and no query can certify at any ring: the adaptive
+    join goes straight to the brute-force fallback, with brute force's
+    results and no more Spark jobs than brute force alone."""
+    pts = clustered_points
+    queries = pts.sample(False, 0.2, seed=7).select(
+        F.col("point_id").alias("query_id"), "lat", "lng"
+    )
+    sc = spark.sparkContext
+
+    def run(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            out = build().toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    got, got_jobs = run(
+        "knn_coarse_adaptive",
+        lambda: knn_join_adaptive(pts, queries, k=4, res=2, ring=1, max_rounds=3),
+    )
+    want, want_jobs = run("knn_coarse_brute", lambda: knn_join_bruteforce(pts, queries, k=4))
+    assert len(got) == len(want) > 0
+    assert (got["query_id"].to_numpy() == want["query_id"].to_numpy()).all()
+    assert (got["point_id"].to_numpy() == want["point_id"].to_numpy()).all()
+    np.testing.assert_allclose(got["dist_km"], want["dist_km"], rtol=1e-9)
+    assert got_jobs <= want_jobs
+
+
 def test_cluster_pairs_components(spark):
     # components: {1,2,3,4} (chain), {10,11}, {20,21,22} (triangle)
     pairs = spark.createDataFrame(

@@ -74,6 +74,25 @@ def test_minhash_lsh_finds_near_dups(docs):
     assert not any(5 in p or 6 in p or 7 in p for p in pairs)
 
 
+def test_minhash_lsh_estimate_is_signature_agreement(docs):
+    """Every est_jaccard is exactly the share of equal MinHash values in the
+    two docs' signatures from ``functions.hashing``."""
+    from navgraph_osm_spark.functions.hashing import minhash_signatures_batch
+
+    rows = sorted((r["doc_id"], r["text"]) for r in docs.collect())
+    sig = dict(
+        zip(
+            [d for d, _ in rows],
+            np.array(minhash_signatures_batch(pd.Series([t for _, t in rows]), 128, 3, 42)),
+        )
+    )
+    out = minhash_lsh_pairs(docs, num_hashes=128, bands=32, threshold=0.5).collect()
+    assert out
+    for r in out:
+        assert r["est_jaccard"] == (sig[r["id_a"]] == sig[r["id_b"]]).sum() / 128
+        assert r["est_jaccard"] >= 0.5
+
+
 def test_simhash_near_dups(docs):
     pairs = {(r["id_a"], r["id_b"]) for r in simhash_pairs(docs, max_hamming=10).collect()}
     assert (0, 1) in pairs and (0, 2) in pairs
@@ -108,28 +127,76 @@ def test_embedding_near_dup(spark):
         assert abs(cos - r["cosine"]) < 1e-9 and cos >= 0.99
 
 
-def test_cluster_pairs_iterative_matches_fast_path(spark, monkeypatch):
-    """Round-6: the small-graph union-find fast path must agree with the
-    distributed label-propagation path (forced by shrinking the bounded
-    probe to zero) on a random pair set with chains and merges."""
-    import numpy as np
-    import pandas as pd
+def _union_find(pairs) -> set[tuple[int, int]]:
+    """(node, min id of its component) for every node of ``pairs``."""
+    parent: dict[int, int] = {}
 
+    def find(x: int) -> int:
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in parent}
+
+
+def test_cluster_pairs_iterative_matches_fast_path(spark, monkeypatch):
+    """Every path of cluster_pairs equals a Python union-find: the
+    driver-side union-find over the contracted rows (default limit) and
+    distributed label propagation over them (limit 1), on a random pair
+    set with chains and merges, the same set spread over 8 partitions, a
+    self-pair, and a chain whose links land in different partitions."""
     from navgraph_osm_spark.operators import dedup
 
     rng = np.random.default_rng(5)
     a = rng.integers(0, 200, 300)
     off = rng.integers(1, 40, 300)
-    pairs_pd = pd.DataFrame({"id_a": a, "id_b": a + off}).drop_duplicates()
-    pairs = spark.createDataFrame(pairs_pd, "id_a long, id_b long")
-    fast = {
-        (r["doc_id"], r["cluster_id"])
-        for r in dedup.cluster_pairs(pairs).collect()
+    rand = pd.DataFrame({"id_a": a, "id_b": a + off}).drop_duplicates()
+    chain = pd.DataFrame({"id_a": np.arange(1000, 1060), "id_b": np.arange(1001, 1061)})
+    self_pair = pd.DataFrame({"id_a": [500, 600, 600], "id_b": [500, 600, 601]})
+    schema = "id_a long, id_b long"
+    cases = {
+        "random": spark.createDataFrame(rand, schema),
+        "random_8_parts": spark.createDataFrame(rand, schema).repartition(8),
+        "self_pair": spark.createDataFrame(self_pair, schema),
+        "chain_8_parts": spark.createDataFrame(chain, schema).repartition(8),
     }
-    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGE_LIMIT", 0)
-    slow = {
-        (r["doc_id"], r["cluster_id"])
-        for r in dedup.cluster_pairs(pairs).collect()
-    }
-    assert fast == slow
-    assert fast  # non-trivial graph
+    assert cases["chain_8_parts"].rdd.glom().map(len).filter(bool).count() > 1
+    for limit in (dedup.SMALL_GRAPH_EDGE_LIMIT, 1):
+        monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGE_LIMIT", limit)
+        for name, pairs in cases.items():
+            want = _union_find(pairs.toPandas().itertuples(index=False))
+            got = {
+                (r["doc_id"], r["cluster_id"])
+                for r in dedup.cluster_pairs(pairs).collect()
+            }
+            assert got == want, (limit, name)
+            if name == "self_pair":
+                assert got == {(500, 500), (600, 600), (601, 600)}
+
+
+def test_cluster_pairs_contracts_cliques_in_few_jobs(spark, monkeypatch):
+    """Near-dup cliques whose pairs exceed the edge limit contract to one
+    row per node and partition, so the union-find path takes them: the
+    whole call runs at most 3 Spark jobs (label propagation runs dozens)."""
+    from navgraph_osm_spark.operators import dedup
+
+    members = [np.arange(c * 100, c * 100 + 40) for c in range(3)]
+    i, j = np.triu_indices(40, 1)
+    pdf = pd.DataFrame(
+        {"id_a": np.concatenate([m[i] for m in members]),
+         "id_b": np.concatenate([m[j] for m in members])}
+    )
+    pairs = spark.createDataFrame(pdf, "id_a long, id_b long")
+    assert pairs.rdd.getNumPartitions() > 1
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGE_LIMIT", len(pdf) // 2)
+    sc = spark.sparkContext
+    sc.setJobGroup("cluster_cliques", "cluster_pairs job-count guard")
+    try:
+        got = {(r["doc_id"], r["cluster_id"]) for r in dedup.cluster_pairs(pairs).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == {(int(n), int(m[0])) for m in members for n in m}
+    assert len(sc.statusTracker().getJobIdsForGroup("cluster_cliques")) <= 3

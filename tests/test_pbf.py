@@ -509,3 +509,22 @@ def test_load_osm_tables_multi_file(spark, tmp_path):
     os.utime(p2, ns=(2_000_000_000_000_000_000, 2_000_000_000_000_000_001))
     pbf.load_osm_tables(spark, [p1, p2], stage_dir=str(tmp_path / "st"))["nodes"].count()
     assert len(set(os.listdir(tmp_path / "st"))) == len(stages_before) + 1
+
+
+def test_mismatched_way_tag_arrays_raise():
+    """A Way whose packed keys (f2) and vals (f3) differ in length is
+    malformed: decoding must name the way and raise, not pair what zips and
+    silently drop the unpaired key."""
+    strtab = b"".join(
+        bytes([0x0A, len(s)]) + s for s in (b"", b"highway", b"oneway", b"residential")
+    )
+    way = bytes(
+        [0x08, 42]  # id (f1) = 42
+        + [0x12, 0x02, 0x01, 0x02]  # keys (f2, packed): highway, oneway
+        + [0x1A, 0x01, 0x03]  # vals (f3, packed): residential — one short
+        + [0x42, 0x02, 0x02, 0x02]  # refs (f8, packed sint64 deltas): 1, 2
+    )
+    group = bytes([0x1A, len(way)]) + way  # PrimitiveGroup.ways (f3)
+    block = bytes([0x0A, len(strtab)]) + strtab + bytes([0x12, len(group)]) + group
+    with pytest.raises(ValueError, match="way 42"):
+        pbf.parse_primitive_block(block)
