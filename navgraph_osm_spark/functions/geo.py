@@ -330,71 +330,6 @@ def polygons_intersect_pairwise_np(
     return hit
 
 
-def _ring_crossings_expr(lat: Column, lng: Column, ring: Column) -> Column:
-    """Crossing count of the rightward ray from (lat, lng) against ONE
-    closed ring (column expression; the kernel's exact float terms)."""
-    closed = F.concat(ring, F.slice(ring, 1, 1))
-    e1 = F.slice(closed, 1, F.size(closed) - 1)
-    e2 = F.slice(closed, 2, F.size(closed) - 1)
-    crossings = F.zip_with(
-        e1,
-        e2,
-        lambda p, q: F.when(
-            ((p["lat"] > lat) & ~(q["lat"] > lat))
-            | (~(p["lat"] > lat) & (q["lat"] > lat)),
-            F.when(
-                lng
-                < p["lng"]
-                + (lat - p["lat"]) / (q["lat"] - p["lat"]) * (q["lng"] - p["lng"]),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        ).otherwise(F.lit(0)),
-    )
-    return F.aggregate(crossings, F.lit(0), lambda a, v: a + v)
-
-
-def point_in_ring_expr(
-    lat: Column, lng: Column, fp: Column, rings: Column | None = None
-) -> Column:
-    """PURE-COLUMN even-odd ray cast: is the point (``lat``, ``lng``)
-    inside the footprint ``fp`` (``array<struct<lat,lng>>``)?
-
-    Reproduces :func:`points_in_polygon_np`'s exact float expression —
-    ``(y1 > p) != (y2 > p)`` crossing test with
-    ``x1 + (p - y1)/(y2 - y1) * (x2 - x1)`` strict-``<`` intercept — as
-    ``zip_with`` over the closed edge list + an ``aggregate`` parity sum,
-    so the whole test stays in whole-stage codegen: no Python, no join.
-    Horizontal edges contribute nothing (the crossing guard is false
-    before the division is reached — CASE WHEN is lazy in codegen).
-    Used by :func:`operators.spatial_join.polygon_to_cells` for exact
-    polyfill; open rings close via the appended first vertex.
-
-    ``rings`` (optional ring start offsets column, ``array<int>``) sums
-    crossings across ring slices — even-odd hole semantics, the column
-    twin of the numpy kernel's ``ring_starts``.
-    """
-    if rings is None:
-        total = _ring_crossings_expr(lat, lng, fp)
-        return F.pmod(total, F.lit(2)) == 1
-    n = F.size(fp)
-    starts = F.when(
-        rings.isNull() | (F.size(rings) == 0), F.array(F.lit(0))
-    ).otherwise(rings)
-    ends = F.concat(
-        F.slice(starts, 2, F.greatest(F.size(starts) - 1, F.lit(0))),
-        F.array(n),
-    )
-    bounds = F.arrays_zip(starts.alias("s"), ends.alias("e"))
-    per_ring = F.transform(
-        bounds,
-        lambda b: _ring_crossings_expr(
-            lat, lng, F.slice(fp, b["s"] + 1, b["e"] - b["s"])
-        ),
-    )
-    total = F.aggregate(per_ring, F.lit(0), lambda a, v: a + v)
-    return F.pmod(total, F.lit(2)) == 1
-
-
 def points_in_polygon_np(
     plat: np.ndarray,
     plng: np.ndarray,

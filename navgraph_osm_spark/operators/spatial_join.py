@@ -2,8 +2,9 @@
 
 Design (BASELINE.json north_star): candidate generation by **cell equi join**
 — points indexed at resolution ``res``, polygons expanded to their covering
-cell set — then **exact refinement** with vectorized ray-casting inside an
-Arrow-batched ``mapInPandas``.  This reuses the reference's spatial-locality
+cell set — then **exact refinement**: an even-odd ray cast unrolled into
+whole-stage codegen for point-in-polygon and polyfill, a shape-batched Arrow
+kernel for the polygon overlay.  This reuses the reference's spatial-locality
 pattern (per-pixel partitioning + border replication, reference
 main.cpp:226-238, 621-708): a polygon is "replicated" into every cell it
 covers, exactly like the reference's border edges are written to both
@@ -13,8 +14,8 @@ Scale notes: the candidate join is a plain equi join on ``cell`` — AQE
 handles skew splitting; dense city-core cells can additionally be salted /
 adaptively split (operators.skew).  Covering-cell expansion is pure column
 arithmetic (sequence × sequence explode), so Catalyst pushes the whole
-candidate stage into codegen; Python runs only in the final refinement over
-candidate pairs.
+candidate stage into codegen; of the joins, Python runs only in the overlay's
+final refinement over candidate pairs.
 """
 
 from __future__ import annotations
@@ -27,7 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from navgraph_osm_spark.cells import cell_expr, cell_from_xy_expr, xy_expr
-from navgraph_osm_spark.functions.geo import points_in_polygon_np
 
 
 def assign_cells(df: DataFrame, res: int, lat: str = "lat", lng: str = "lng",
@@ -188,10 +188,10 @@ def polygon_to_cells(
     footprint at resolution ``res``.
 
     - ``mode="center"`` (H3's semantics): cells whose CENTER lies inside
-      the polygon — decided ENTIRELY IN CODEGEN by a per-cell even-odd
-      ray cast over the footprint array
-      (:func:`functions.geo.point_in_ring_expr`): bbox covering explode →
-      cell-center lat/lng (pure arithmetic) → HOF parity filter.  No
+      the polygon — decided ENTIRELY IN CODEGEN by the point-in-polygon
+      join's ray cast (:func:`_unrolled_ray_cast` over the closed edge
+      list, built once per polygon row): bbox covering explode →
+      cell-center lat/lng (pure arithmetic) → parity filter.  No
       Python, no join, no shuffle — a long diagonal sliver keeps only the
       ~O(perimeter) cells its body actually touches instead of the full
       bbox rectangle.
@@ -214,10 +214,10 @@ def polygon_to_cells(
       Tightest possible tiling for non-rectangular footprints.
 
     MULTI-RING footprints (a ``rings`` column with start offsets): the
-    center test sums crossings across ring slices — the column twin of
-    the numpy kernel's ``ring_starts`` — so hole cells are excluded and
-    separated shells each fill their own cells; ``exact_overlap``
-    rasterizes every ring's boundary.  (``mode="overlap"`` stays the
+    edge list closes each ring on itself, so crossings sum across rings —
+    the column twin of the numpy kernel's ``ring_starts`` — hole cells are
+    excluded and separated shells each fill their own cells;
+    ``exact_overlap`` rasterizes every ring's boundary.  (``mode="overlap"`` stays the
     single-bbox covering.)  Output (poly_id, cell), unique per row by
     construction.
     """
@@ -259,14 +259,16 @@ def polygon_to_cells(
         return boundary.unionByName(interior).distinct()
     if mode != "center":
         raise ValueError(f"unknown mode {mode!r}")
-    from navgraph_osm_spark.functions.geo import point_in_ring_expr
 
-    n = 1 << res
+    # closed edge list once per polygon ROW, before the covering explode
+    ring_col = F.col(rings) if has_rings else None
+    base = polygons.select(poly_id, fp, *([rings] if has_rings else [])).withColumn(
+        "__edges", _closed_edges_expr(F.col(fp), ring_col)
+    )
     if has_rings:
         # per-ring coverings would DROP hole-only candidate cells — fine:
         # hole cells are excluded by parity anyway, and separated shells
         # cover only their own cells (tight)
-        base = polygons.select(poly_id, fp, rings)
         cov = covering_cells(base, res, fp, keep_bbox=True, rings=rings)
         # per-ring covering path has no cx/cy: rebuild from the cell id is
         # avoidable — recompute center from cell bounds expr instead
@@ -277,15 +279,14 @@ def polygon_to_cells(
         )
         center_lat = (lat_min_c + lat_max_c) / F.lit(2.0)
         center_lng = (lng_min_c + lng_max_c) / F.lit(2.0)
-        return cov.filter(
-            point_in_ring_expr(center_lat, center_lng, F.col(fp), F.col(rings))
-        ).select(poly_id, "cell")
-    cov = covering_cells(polygons.select(poly_id, fp), res, fp, keep_xy=True)
-    center_lat = F.lit(90.0) - (F.col("cy") + F.lit(0.5)) * F.lit(180.0 / n)
-    center_lng = (F.col("cx") + F.lit(0.5)) * F.lit(360.0 / n) - F.lit(180.0)
-    return cov.filter(point_in_ring_expr(center_lat, center_lng, F.col(fp))).select(
-        poly_id, "cell"
-    )
+    else:
+        n = 1 << res
+        cov = covering_cells(base, res, fp, keep_xy=True)
+        center_lat = F.lit(90.0) - (F.col("cy") + F.lit(0.5)) * F.lit(180.0 / n)
+        center_lng = (F.col("cx") + F.lit(0.5)) * F.lit(360.0 / n) - F.lit(180.0)
+    return cov.filter(
+        _unrolled_ray_cast(center_lat, center_lng, F.col("__edges"))
+    ).select(poly_id, "cell")
 
 
 def polyline_to_cells(
@@ -518,102 +519,6 @@ def uncompact_cells(
     )
 
 
-def _hof_ray_parity(lat_c, lng_c, edges_col):
-    """Even-odd parity of one point vs an edge list via ``aggregate`` —
-    the lazily-evaluated fallback for shapes beyond the unroll budget."""
-    total = F.aggregate(
-        edges_col,
-        F.lit(0),
-        lambda acc, ed: acc
-        + _edge_crossing_term(lat_c, lng_c, ed["y1"], ed["x1"], ed["y2"], ed["x2"]),
-    )
-    return F.pmod(total, F.lit(2)) == 1
-
-
-def _orient_expr(e, px, py):
-    """Sign term of the cross product (e2−e1)×(p−e1) — the numpy kernel's
-    ``_orient_np`` float expression exactly."""
-    return (e["x2"] - e["x1"]) * (py - e["y1"]) - (e["y2"] - e["y1"]) * (
-        px - e["x1"]
-    )
-
-
-def _proper_cross_expr(e1, e2):
-    o1 = _orient_expr(e1, e2["x1"], e2["y1"])
-    o2 = _orient_expr(e1, e2["x2"], e2["y2"])
-    o3 = _orient_expr(e2, e1["x1"], e1["y1"])
-    o4 = _orient_expr(e2, e1["x2"], e1["y2"])
-    return ((o1 * o2) < 0) & ((o3 * o4) < 0)
-
-
-def _pair_intersects_expr(
-    avlat, avlng, a_edges, bvlat, bvlng, b_edges, max_unrolled: int = 4
-):
-    """PURE-COLUMN polygon-overlap test: any vertex of one side strictly
-    inside the other (ring-summed even-odd, all rings' vertices) OR any
-    proper edge-pair crossing — the float-exact expression twin of
-    :func:`functions.geo.polygons_intersect_np` (whose bbox/edge
-    prefilters are performance-only and semantics-preserving, so the
-    unprefiltered test is equivalent).  Unrolled over ``element_at``
-    accesses while both edge lists fit ``max_unrolled`` (codegen), with a
-    higher-order-function fallback branch for bigger shapes (evaluated
-    lazily).  Multi-ring sides are handled uniformly: the edge lists are
-    per-ring closed and the vertex arrays span all rings."""
-
-    def _any_inside_unrolled(vlat, vlng, edges):
-        szv = F.size(vlat)
-        pred = F.lit(False)
-        for k in range(max_unrolled):
-            plat = F.element_at(vlat, k + 1)
-            plng = F.element_at(vlng, k + 1)
-            sz = F.size(edges)
-            tot = F.lit(0)
-            for j in range(max_unrolled):
-                ed = F.element_at(edges, j + 1)
-                tot = tot + F.when(
-                    F.lit(j) < sz,
-                    _edge_crossing_term(
-                        plat, plng, ed["y1"], ed["x1"], ed["y2"], ed["x2"]
-                    ),
-                ).otherwise(F.lit(0))
-            pred = pred | F.coalesce(
-                (F.lit(k) < szv) & (F.pmod(tot, F.lit(2)) == 1), F.lit(False)
-            )
-        return pred
-
-    def _any_cross_unrolled(ea, eb):
-        sza, szb = F.size(ea), F.size(eb)
-        pred = F.lit(False)
-        for i in range(max_unrolled):
-            e1 = F.element_at(ea, i + 1)
-            for j in range(max_unrolled):
-                e2 = F.element_at(eb, j + 1)
-                pred = pred | F.coalesce(
-                    (F.lit(i) < sza)
-                    & (F.lit(j) < szb)
-                    & _proper_cross_expr(e1, e2),
-                    F.lit(False),
-                )
-        return pred
-
-    small = (F.size(a_edges) <= max_unrolled) & (F.size(b_edges) <= max_unrolled)
-    unrolled = (
-        _any_inside_unrolled(avlat, avlng, b_edges)
-        | _any_inside_unrolled(bvlat, bvlng, a_edges)
-        | _any_cross_unrolled(a_edges, b_edges)
-    )
-    verts_a = F.arrays_zip(avlat.alias("la"), avlng.alias("lo"))
-    verts_b = F.arrays_zip(bvlat.alias("la"), bvlng.alias("lo"))
-    hof = (
-        F.exists(verts_a, lambda v: _hof_ray_parity(v["la"], v["lo"], b_edges))
-        | F.exists(verts_b, lambda v: _hof_ray_parity(v["la"], v["lo"], a_edges))
-        | F.exists(
-            a_edges, lambda e1: F.exists(b_edges, lambda e2: _proper_cross_expr(e1, e2))
-        )
-    )
-    return F.when(small, unrolled).otherwise(hof)
-
-
 def polygon_intersection_join(
     a_polys: DataFrame,
     b_polys: DataFrame,
@@ -623,24 +528,16 @@ def polygon_intersection_join(
     fp: str = "footprint",
     exact: bool = True,
     rings: str = "ring_offsets",
-    refine: str = "python",
 ) -> DataFrame:
     """Polygon ⋈ polygon OVERLAY join: pairs whose footprints intersect —
     the fourth classic spatial join next to containment (PIP), nearest
     (kNN) and range (distance_join).
 
-    ``refine`` selects the exact-refinement engine.  ``"python"`` (the
-    default) runs the Arrow shape-batched numpy kernels; ``"expr"``
-    evaluates the same overlap test — any vertex of one side even-odd
-    inside the other, or any proper edge crossing — as pure column
-    expressions over per-row closed edge lists
-    (:func:`_pair_intersects_expr`), removing the rebalance shuffle and
-    the Python stage.  A/B at sf1.0 (round 6): the pairwise test is
-    quadratic in vertices, so unlike the point-in-polygon join the
-    expression form LOSES here (5.2s vs 2.9s — ~50 guarded terms per
-    candidate in the join stage vs one vectorized kernel per shape
-    batch); kept selectable for workloads whose candidate stage is the
-    bottleneck.
+    The exact refinement is the Arrow shape-batched numpy kernel (step 4)
+    rather than a codegen expression as in the point-in-polygon join: the
+    pairwise overlap test is quadratic in vertices, and a column-expression
+    form measured slower at sf1.0 (5.2 s vs 2.9 s — ~50 guarded terms per
+    candidate in the join stage vs one vectorized kernel per shape batch).
 
     Plan (candidate work JVM-side):
 
@@ -692,32 +589,12 @@ def polygon_intersection_join(
     )
     a_src = spread_scan(a_polys.select(*a_cols))
     b_src = spread_scan(b_polys.select(*b_cols))
-    if exact and refine == "expr":
-        # vertex arrays + per-ring closed edge lists once per polygon ROW
-        # (pre-explode); the raw footprints are then prunable from the join
-        a_src = a_src.withColumns({
-            "__avlat": F.transform("__a_fp", lambda p: p["lat"]),
-            "__avlng": F.transform("__a_fp", lambda p: p["lng"]),
-            "__a_edges": _closed_edges_expr(
-                F.col("__a_fp"), F.col("__a_rings") if has_ar else None
-            ),
-        })
-        b_src = b_src.withColumns({
-            "__bvlat": F.transform("__b_fp", lambda p: p["lat"]),
-            "__bvlng": F.transform("__b_fp", lambda p: p["lng"]),
-            "__b_edges": _closed_edges_expr(
-                F.col("__b_fp"), F.col("__b_rings") if has_br else None
-            ),
-        })
-    a_extra = ["__avlat", "__avlng", "__a_edges"] if "__a_edges" in a_src.columns else []
-    b_extra = ["__bvlat", "__bvlng", "__b_edges"] if "__b_edges" in b_src.columns else []
     ca = covering_cells(
         a_src,
         res, "__a_fp", keep_bbox=True, keep_xy=True,
     ).select(
         a_id, "__a_fp", "cell", "cx", "cy",
         *(["__a_rings"] if has_ar else []),
-        *a_extra,
         F.col("lat_min").alias("a_lat_min"), F.col("lat_max").alias("a_lat_max"),
         F.col("lng_min").alias("a_lng_min"), F.col("lng_max").alias("a_lng_max"),
     )
@@ -729,7 +606,6 @@ def polygon_intersection_join(
     ).select(
         b_id, "__b_fp", "cell",
         *(["__b_rings"] if has_br else []),
-        *b_extra,
         F.col("lat_min").alias("b_lat_min"), F.col("lat_max").alias("b_lat_max"),
         F.col("lng_min").alias("b_lng_min"), F.col("lng_max").alias("b_lng_max"),
     )
@@ -755,13 +631,6 @@ def polygon_intersection_join(
     )
     if not exact:
         return cand.select(a_id, b_id)
-    if refine == "expr":
-        return cand.filter(
-            _pair_intersects_expr(
-                F.col("__avlat"), F.col("__avlng"), F.col("__a_edges"),
-                F.col("__bvlat"), F.col("__bvlng"), F.col("__b_edges"),
-            )
-        ).select(a_id, b_id)
     sel_cols = [
         F.col(a_id),
         F.col(b_id),
@@ -777,8 +646,7 @@ def polygon_intersection_join(
     sel = cand.select(*sel_cols)
     # refinement input inherits the cell join's skew (dense cells emit most
     # candidate pairs); the kernel is row-independent, so rebalance on the
-    # pair hash before the Python stage — AQE sizes the shuffle output, the
-    # same shape as point_in_polygon_join's pre-refinement rebalance
+    # pair hash before the Python stage — AQE sizes the shuffle output
     sel = sel.repartition(F.xxhash64(F.col(a_id), F.col(b_id)))
     dtypes = dict(sel.dtypes)
     out_schema = f"{a_id} {dtypes[a_id]}, {b_id} {dtypes[b_id]}"
@@ -983,107 +851,6 @@ def split_antimeridian(
     return polygons.select(*cols).mapInPandas(_kernel, schema=schema)
 
 
-_REFINE_HELP_COLS = ("__plat", "__plng", "__fp_lat", "__fp_lng")
-
-
-def _poly_groups(pid: np.ndarray):
-    """(stable argsort order, group start offsets) for grouping a batch's
-    candidate rows by polygon id with pure numpy — replaces pandas
-    ``groupby(...).groups`` + ``index.get_indexer``, whose per-group
-    overhead dominated the one remaining Python hot path."""
-    order = np.argsort(pid, kind="stable")
-    sorted_pid = pid[order]
-    starts = np.flatnonzero(
-        np.concatenate(([True], sorted_pid[1:] != sorted_pid[:-1]))
-    )
-    return order, starts
-
-
-def _refine_kernel(id_cols: list[str], has_rings: bool = False):
-    """Kernel factory: exact point-in-polygon refinement over candidate pairs.
-
-    Vectorizes over all points sharing a polygon (grouped by the polygon id,
-    ``id_cols[1]``, via one stable argsort) within the Arrow batch; yields
-    only the id columns of surviving pairs.  ``has_rings`` reads the carried
-    ``__fp_rings`` ring offsets (holes / multipolygon shells — crossings
-    summed across rings).
-    """
-    pid_col = id_cols[1]
-
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield pdf[id_cols]
-                continue
-            pid = pdf[pid_col].to_numpy()
-            plat = pdf["__plat"].to_numpy()
-            plng = pdf["__plng"].to_numpy()
-            fp_lat_col = pdf["__fp_lat"].to_numpy()
-            fp_lng_col = pdf["__fp_lng"].to_numpy()
-            rings_col = pdf["__fp_rings"].to_numpy() if has_rings else None
-            order, starts = _poly_groups(pid)
-            keep = np.zeros(n, dtype=bool)
-            bounds = np.append(starts, n)
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                idx = order[s:e]
-                first = idx[0]
-                keep[idx] = points_in_polygon_np(
-                    plat[idx], plng[idx],
-                    np.asarray(fp_lat_col[first], dtype=np.float64),
-                    np.asarray(fp_lng_col[first], dtype=np.float64),
-                    ring_starts=rings_col[first] if has_rings else None,
-                )
-            yield pdf[keep][id_cols]
-
-    return _kernel
-
-
-def _refine_kernel_broadcast(id_cols: list[str], poly_bc):
-    """Refinement with the polygon table shipped once per executor (broadcast)
-    instead of per candidate row — the polygon side is a dim table (the
-    reference's restriction-broadcast pattern, SURVEY.md §2.3 J8/J9).
-    Map values are LISTS of (fp_lat, fp_lng, ring_starts|None) triples: an
-    id may map to several geometry PARTS (``split_antimeridian`` emits
-    seam-sharing parts under one id) — a point is inside the polygon iff
-    it is inside ANY part, and parts are lng-disjoint so a (point, id)
-    pair still survives at most one candidate row."""
-
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        polys = poly_bc.value
-        pid_col = id_cols[1]
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield pdf[id_cols]
-                continue
-            pid = pdf[pid_col].to_numpy()
-            plat = pdf["__plat"].to_numpy()
-            plng = pdf["__plng"].to_numpy()
-            order, starts = _poly_groups(pid)
-            keep = np.zeros(n, dtype=bool)
-            bounds = np.append(starts, n)
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                idx = order[s:e]
-                inside = np.zeros(idx.size, dtype=bool)
-                for fp_lat, fp_lng, ring_starts in polys[pid[idx[0]]]:
-                    rem = ~inside
-                    if not rem.any():
-                        break
-                    inside[rem] = points_in_polygon_np(
-                        plat[idx[rem]], plng[idx[rem]], fp_lat, fp_lng,
-                        ring_starts=ring_starts,
-                    )
-                keep[idx] = inside
-            yield pdf[keep][id_cols]
-
-    return _kernel
-
-
-BROADCAST_POLY_LIMIT = 200_000
-BROADCAST_VERTEX_LIMIT = 5_000_000  # ≈80 MB of float64 lat/lng pairs
-
-
 def _is_axis_rect_expr(fp_col, lat_min, lat_max, lng_min, lng_max):
     """True iff the footprint is exactly its bounding box (axis-aligned
     rectangle traversed in perimeter order, optionally explicitly closed
@@ -1240,59 +1007,44 @@ def point_in_polygon_join(
     lng: str = "lng",
     fp: str = "footprint",
     exact: bool = True,
-    broadcast_polys: bool | None = None,
     rings: str = "ring_offsets",
     carry: tuple[str, ...] = (),
-    refine: str | None = None,
 ) -> DataFrame:
     """Points ⋈ polygons containment join.
 
     ``carry`` lists extra POINT-side columns passed through to the output
     (e.g. an event timestamp for the streaming geofence aggregation) —
-    they ride along both the codegen rectangle path and the refinement
-    kernel without affecting the join logic.
+    they ride along the candidate join and refinement without affecting
+    the join logic.
 
     Multi-ring polygons (holes / OSM multipolygon shells): when the
     polygon table carries a ``rings`` column (``array<int>`` of ring start
     offsets into the flat footprint, e.g. ``[0, 4]`` for a donut; null or
     single-entry = plain polygon), the refinement sums ray crossings across
     rings — even-odd parity excludes hole interiors.  Multi-ring rows are
-    never rect-fast-pathed; single-ring rows are unaffected, so a
-    rectangles-only workload still never leaves codegen.
+    never rect-fast-pathed.
 
-    Plan (the whole join JVM-side by default):
+    Plan (the whole join JVM-side):
 
     1. candidates: equi join on cell (point cell vs polygon covering cells);
     2. **bbox prefilter in codegen** — half-open bounds chosen to match the
-       ray-cast kernel's boundary convention exactly (a point at
-       lat_max/lng_max can never be inside; at lat_min/lng_min it can);
+       ray cast's boundary convention exactly (a point at lat_max/lng_max
+       can never be inside; at lat_min/lng_min it can);
     3. **rectangle fast path** — footprints that are exactly their bbox
        (detected per row, see :func:`_is_axis_rect_expr`) are decided by the
-       prefilter alone, entirely in codegen;
-    4. non-rectangular bbox survivors refine through the PURE-COLUMN
-       even-odd ray cast (:func:`functions.geo.point_in_ring_expr`, the
-       float-exact twin of the numpy kernel) — the default ``refine="expr"``
-       path has ZERO Python stages, no pre-refinement rebalance shuffle and
-       no branch split, so the candidate join is planned exactly once.
+       prefilter alone;
+    4. non-rectangular bbox survivors refine through the even-odd ray cast
+       :func:`_unrolled_ray_cast` over the closed edge list built once per
+       polygon row (the float-exact twin of
+       :func:`functions.geo.points_in_polygon_np`) — no Python stage, and
+       the candidate join is planned once.
 
     Output pairs are unique by construction (a point lies in exactly one
     cell at ``res`` and each polygon covers a cell at most once), so there is
     no distinct — no extra shuffle of the result.
-
-    ``refine="python"`` (implied by passing ``broadcast_polys`` explicitly)
-    restores the Arrow-batched numpy kernels — the right tool when
-    footprints are huge (10k+ vertices), where one vectorized kernel call
-    per polygon group beats a per-row O(nv) expression.  There, when the
-    polygon side is dim-sized (≤ ``BROADCAST_POLY_LIMIT`` rows and
-    ≤ ``BROADCAST_VERTEX_LIMIT`` total vertices, probed with a bounded
-    ``limit(n+1)`` job — never an unbounded count/collect), its vertices are
-    broadcast to the refinement kernel so candidate rows carry only ids +
-    point coordinates.  ``broadcast_polys=False`` forces the carry-along
-    kernel (arbitrarily large polygon tables).
     """
     from navgraph_osm_spark.sources.tables import spread_scan
 
-    sc = points.sparkSession.sparkContext
     has_rings = rings in polygons.columns
     single_ring = (
         (F.col(rings).isNull() | (F.size(F.col(rings)) <= 1))
@@ -1300,13 +1052,9 @@ def point_in_polygon_join(
         else F.lit(True)
     )
     poly_cols = [poly_id, fp] + ([rings] if has_rings else [])
-    if refine is None:
-        # an explicit broadcast_polys choice selects the kernel machinery it
-        # configures; otherwise the zero-Python expression path
-        refine = "python" if broadcast_polys is not None else "expr"
-    # candidate generation + (expr-mode) refinement run inside the point
-    # side's scan tasks when the polygon side broadcasts — spread an
-    # unsplittable single-file point input (no-op on parallel scans)
+    # candidate generation + refinement run inside the point side's scan
+    # tasks when the polygon side broadcasts — spread an unsplittable
+    # single-file point input (no-op on parallel scans)
     pts = assign_cells(
         spread_scan(points.select(point_id, lat, lng, *carry)), res, lat, lng
     )
@@ -1314,7 +1062,7 @@ def point_in_polygon_join(
     # whole candidate/refinement pipeline run inside the polygon side's
     # scan tasks — spread that too (no-op on already-parallel scans)
     poly_src = spread_scan(polygons.select(*poly_cols))
-    if exact and refine == "expr":
+    if exact:
         # closed edge list once per polygon ROW (pre-explode); the raw
         # footprint is then prunable from the covering explode + join
         poly_src = poly_src.withColumn(
@@ -1347,119 +1095,7 @@ def point_in_polygon_join(
     )
     if not exact:
         return cand.select(point_id, poly_id, *carry)
-    if refine == "expr":
-        inside = F.when(F.col("__rect"), F.lit(True)).otherwise(
-            _unrolled_ray_cast(F.col(lat), F.col(lng), F.col("__edges"))
-        )
-        return cand.filter(inside).select(point_id, poly_id, *carry)
-    rect_hits = cand.filter(F.col("__rect")).select(point_id, poly_id, *carry)
-    rest = cand.filter(~F.col("__rect"))
-
-    n_nonrect = None
-    probed_map = None
-    if broadcast_polys is None:
-        # ONE bounded probe job decides (a) broadcastability, (b) whether
-        # the Python refinement branch can receive any rows at all — an
-        # all-rectangle workload (the raster↔vector tiling case) then never
-        # runs a polygon collect() or a mapInPandas stage — and (c) ships
-        # the NON-rect vertices for the broadcast map in the same pass, so
-        # no second collect job ever runs.
-        pb = footprint_bbox(polygons.select(*poly_cols), fp)
-        rect = _is_axis_rect_expr(
-            F.col(fp), F.col("lat_min"), F.col("lat_max"),
-            F.col("lng_min"), F.col("lng_max"),
-        ) & single_ring
-        probe = (
-            pb.select(
-                F.col(poly_id),
-                F.size(F.col(fp)).alias("nv"),
-                rect.alias("rect"),
-                F.when(~rect, F.col(fp)).alias("__fp"),
-                (F.when(~rect, F.col(rings)) if has_rings else F.lit(None)).alias(
-                    "__rings"
-                ),
-            )
-            .limit(BROADCAST_POLY_LIMIT + 1)
-            .collect()
-        )
-        if len(probe) <= BROADCAST_POLY_LIMIT:
-            n_nonrect = sum(0 if r["rect"] else 1 for r in probe)
-        broadcast_polys = (
-            len(probe) <= BROADCAST_POLY_LIMIT
-            and sum(r["nv"] for r in probe) <= BROADCAST_VERTEX_LIMIT
-        )
-        if broadcast_polys:
-            probed_map = {}
-            for r in probe:
-                if r["rect"]:
-                    continue
-                probed_map.setdefault(r[poly_id], []).append((
-                    np.array([p["lat"] for p in r["__fp"]], dtype=np.float64),
-                    np.array([p["lng"] for p in r["__fp"]], dtype=np.float64),
-                    r["__rings"],
-                ))
-    if n_nonrect == 0:
-        return rect_hits
-
-    rest_cols = [
-        F.col(point_id),
-        F.col(poly_id),
-        *[F.col(c) for c in carry],
-        F.col(lat).alias("__plat"),
-        F.col(lng).alias("__plng"),
-    ]
-    if not broadcast_polys:
-        rest_cols += [
-            F.transform(F.col(fp), lambda p: p["lat"]).alias("__fp_lat"),
-            F.transform(F.col(fp), lambda p: p["lng"]).alias("__fp_lng"),
-        ]
-        if has_rings:
-            rest_cols.append(F.col(rings).alias("__fp_rings"))
-    rest = rest.select(*rest_cols)
-    # refinement input inherits the cell join's skew (dense city-core cells);
-    # refinement is row-independent, so rebalance before the python stage.
-    # Partitioning by (poly_id, salt) keeps each Arrow batch dense in few
-    # polygons (the kernel vectorizes per polygon), salt caps per-poly skew.
-    # No explicit partition count: AQE coalesces the shuffle output to its
-    # target size, so a small survivor set doesn't fan out into dozens of
-    # near-empty Python tasks (measured ~1s at sf0.1) while a 100 TB
-    # survivor set still spreads across spark.sql.shuffle.partitions.
-    rest = rest.repartition(
-        F.col(poly_id),
-        F.pmod(F.xxhash64(point_id), F.lit(16)),
+    inside = F.when(F.col("__rect"), F.lit(True)).otherwise(
+        _unrolled_ray_cast(F.col(lat), F.col(lng), F.col("__edges"))
     )
-    dtypes = dict(rest.dtypes)
-    out_schema = ", ".join(
-        f"{c} {dtypes[c]}" for c in (point_id, poly_id, *carry)
-    )
-    if broadcast_polys:
-        # only NON-rect polygons can reach the refinement kernel — their
-        # vertices came back with the probe when one ran; a caller-forced
-        # broadcast collects them here instead
-        if probed_map is not None:
-            poly_map = probed_map
-        else:
-            pb = footprint_bbox(polygons.select(*poly_cols), fp)
-            nonrect = pb.filter(
-                ~(
-                    _is_axis_rect_expr(
-                        F.col(fp), F.col("lat_min"), F.col("lat_max"),
-                        F.col("lng_min"), F.col("lng_max"),
-                    )
-                    & single_ring
-                )
-            )
-            poly_map = {}
-            for r in nonrect.select(*poly_cols).collect():
-                poly_map.setdefault(r[poly_id], []).append((
-                    np.array([p["lat"] for p in r[fp]], dtype=np.float64),
-                    np.array([p["lng"] for p in r[fp]], dtype=np.float64),
-                    r[rings] if has_rings else None,
-                ))
-        kernel = _refine_kernel_broadcast(
-            [point_id, poly_id, *carry], sc.broadcast(poly_map)
-        )
-    else:
-        kernel = _refine_kernel([point_id, poly_id, *carry], has_rings=has_rings)
-    refined = rest.mapInPandas(kernel, schema=out_schema)
-    return rect_hits.unionByName(refined)
+    return cand.filter(inside).select(point_id, poly_id, *carry)

@@ -119,59 +119,19 @@ def phash64(arr: np.ndarray) -> int:
     return val - (1 << 64) if val >= (1 << 63) else val
 
 
-def _resize_block_mean_batch(gray: np.ndarray, size: int = 32) -> np.ndarray:
-    """Batched area-sample resize: (n, h, w) → (n, size, size) — the same
-    summed-area-table arithmetic as :func:`_resize_block_mean`, stacked."""
-    n, h, w = gray.shape
-    ys = (np.arange(size) * h // size).astype(np.int64)
-    ys_end = np.maximum(((np.arange(size) + 1) * h) // size, ys + 1)
-    xs = (np.arange(size) * w // size).astype(np.int64)
-    xs_end = np.maximum(((np.arange(size) + 1) * w) // size, xs + 1)
-    cs = np.zeros((n, h + 1, w + 1), dtype=np.float64)
-    cs[:, 1:, 1:] = gray.cumsum(1).cumsum(2)
-    out = (
-        cs[:, ys_end[:, None], xs_end[None, :]]
-        - cs[:, ys[:, None], xs_end[None, :]]
-        - cs[:, ys_end[:, None], xs[None, :]]
-        + cs[:, ys[:, None], xs[None, :]]
-    )
-    area = (ys_end - ys)[:, None] * (xs_end - xs)[None, :]
-    return out / area
-
-
-def phash64_batch(stack: np.ndarray) -> np.ndarray:
-    """phash64 over a SAME-SHAPE image stack (n, h, w, 3) → int64[n].
-
-    One batched gray projection / SAT resize / DCT / partition instead of
-    ~20 numpy calls per image — asserted bit-identical to the scalar
-    :func:`phash64` on this platform
-    (tests/test_images.py::test_phash_batch_bit_identical), which also
-    guards against a BLAS whose batched gemm rounds differently."""
-    n = stack.shape[0]
-    gray = stack.astype(np.float64) @ _GRAY_W
-    small = _resize_block_mean_batch(gray, 32)
-    m = _dct_matrix(32)
-    d = m @ small @ np.ascontiguousarray(m.T)
-    low = d[:, :8, :8].reshape(n, 64)
-    med = np.partition(low[:, 1:], 31, axis=1)[:, 31]
-    bits = low > med[:, None]
-    vals = (bits * _BIT_POW[None, :]).sum(axis=1, dtype=np.uint64)
-    return vals.astype(np.int64)  # two's-complement reinterpretation
-
-
 def phash64_many(arrs: list[np.ndarray]) -> np.ndarray:
     """phash64 for a heterogeneous image list.
 
     The only shape-dependent stage is the 32×32 area resize, so that runs
     per image with the scalar kernel's exact arithmetic; everything after
     (gray done per image too, then DCT, median threshold, bit pack) runs
-    as ONE batched pass over the whole list.  The former per-shape-group
-    dispatch degenerated to per-image scalar calls on shape-diverse
-    corpora (49×49 shape classes → mostly singleton groups), paying ~20
-    small numpy calls per image; this form is bit-identical (the batched
-    DCT/threshold tail is the phash64_batch construction, asserted equal
-    to the scalar path by tests/test_images.py) at a fraction of the
-    per-image overhead."""
+    as ONE batched pass over the whole list.  Batching by image shape
+    instead would degenerate to per-image calls on shape-diverse corpora
+    (49×49 shape classes → mostly singleton groups), paying ~20 small
+    numpy calls per image; this form is bit-identical to the scalar
+    :func:`phash64` (asserted by
+    tests/test_images.py::test_phash_batch_bit_identical) at a fraction
+    of the per-image overhead."""
     n = len(arrs)
     if n == 0:
         return np.empty(0, dtype=np.int64)

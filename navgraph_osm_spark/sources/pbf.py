@@ -618,13 +618,20 @@ def parse_primitive_block_ref(data: bytes) -> dict:
                     elif df_ == 10:
                         tc.append(_packed(data, dwt, dval).astype(np.int64))
                 roles = _cat(rlc) if rlc else np.empty(0, np.int64)
+                memids = np.cumsum(_cat(mc)) if mc else np.empty(0, np.int64)
+                types = _cat(tc) if tc else np.empty(0, np.int64)
+                if not roles.size == memids.size == types.size:
+                    raise ValueError(
+                        f"relation {rid}: {roles.size} member roles, "
+                        f"{memids.size} memids, {types.size} types"
+                    )
                 relations.append(
                     (
                         rid,
                         _tags_of(_cat(kc), _cat(vc), strings, f"relation {rid}"),
                         [strings[int(r)] for r in roles],
-                        np.cumsum(_cat(mc)) if mc else np.empty(0, np.int64),
-                        _cat(tc) if tc else np.empty(0, np.int64),
+                        memids,
+                        types,
                     )
                 )
 
@@ -829,9 +836,10 @@ def parse_primitive_block_flat(data: bytes) -> dict:
 
     Falls back to :func:`parse_primitive_block_ref` (then flattens) when a
     blob uses irregular encodings: non-packed repeated scalars in
-    Way/Relation messages, mismatched parallel arrays (tag keys/values of
-    different lengths then raise ``ValueError`` there), or keys_vals
-    streams the vectorized splitter cannot prove unambiguous.
+    Way/Relation messages, mismatched parallel arrays (tag keys/values or
+    relation roles/memids/types of different lengths then raise
+    ``ValueError`` there), or keys_vals streams the vectorized splitter
+    cannot prove unambiguous.
     """
     strings: list[str] = []
     groups: list[tuple[int, int]] = []
@@ -992,7 +1000,7 @@ def parse_primitive_block_flat(data: bytes) -> dict:
         mc, mv = r_memids.decode(data, n_rels)
         tc, tv = r_types.decode(data, n_rels)
         if not ((kc == vc).all() and (lc == mc).all() and (mc == tc).all()):
-            return _fallback()
+            return _fallback()  # the walk raises on the mismatch
         out["rel_ids"] = np.array(rel_ids, dtype=np.int64)
         out["rel_tag_counts"] = kc
         out["rel_keys"] = sarr[kv_.astype(np.int64)] if kv_.size else np.empty(0, object)
@@ -1043,20 +1051,16 @@ def _flat_from_legacy(block: dict) -> dict:
         out["rel_vals"] = np.array(
             [v for r in rs for v in r[1].values()], dtype=object
         )
-        counts = np.array(
-            [min(len(r[2]), r[3].size, r[4].size) for r in rs], dtype=np.int64
-        )
+        counts = np.array([r[3].size for r in rs], dtype=np.int64)
         out["rel_member_counts"] = counts
-        out["rel_roles"] = np.array(
-            [role for r in rs for role in r[2][: r[3].size]], dtype=object
-        )
+        out["rel_roles"] = np.array([role for r in rs for role in r[2]], dtype=object)
         out["rel_memids"] = (
-            np.concatenate([r[3][: c] for r, c in zip(rs, counts)]).astype(np.int64)
+            np.concatenate([r[3] for r in rs]).astype(np.int64)
             if counts.sum()
             else np.empty(0, np.int64)
         )
         out["rel_types"] = (
-            np.concatenate([r[4][: c] for r, c in zip(rs, counts)]).astype(np.int64)
+            np.concatenate([r[4] for r in rs]).astype(np.int64)
             if counts.sum()
             else np.empty(0, np.int64)
         )

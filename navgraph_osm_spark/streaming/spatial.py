@@ -35,10 +35,9 @@ def streaming_geofence_join(
     """Streaming points ⋈ static polygons: one output row per (point,
     containing polygon) with the event time carried through.
 
-    The rectangle fast path stays pure codegen on the stream; non-rect
-    polygons refine through the broadcast Arrow kernel (the static side
-    satisfies the dim-table contract by construction — zones are
-    thousands, not billions).  Output is append-safe: stateless, no
+    The whole join stays pure codegen on the stream: rectangles are
+    decided by the bbox prefilter, non-rect polygons by the batch
+    operator's unrolled ray cast.  Output is append-safe: stateless, no
     aggregation state.
     """
     return point_in_polygon_join(

@@ -11,11 +11,11 @@ from __future__ import annotations
 import math
 
 import duckdb
-import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
 from navgraph_osm_spark.sources.tables import DRIVER_TABLES
+from scripts.oracle_sweep import TOL, _canon
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -28,16 +28,6 @@ def duck():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
     return con
-
-
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype.kind == "f":
-            df[c] = df[c].round(9)
-        elif df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
 ORACLED = sorted(entry_mod.oracle_sql().keys())
@@ -53,13 +43,19 @@ def test_query_matches_oracle(spark, duck, name):
         f"{name}: columns {sorted(got.columns)} vs {sorted(want.columns)}"
     )
     assert len(got) == len(want), f"{name}: rows {len(got)} vs {len(want)}"
-    g, w = _canon(got), _canon(want)
+    floats = {
+        c for c in got.columns
+        if got[c].dtype.kind == "f" or want[c].dtype.kind == "f"
+    }
+    g, w = _canon(got, floats), _canon(want, floats)
     for c in g.columns:
-        if g[c].dtype.kind == "f" or w[c].dtype.kind == "f":
-            gv = g[c].astype(float).to_numpy()
-            wv = w[c].astype(float).to_numpy()
+        if c in floats:
+            gv = g[c].to_numpy()
+            wv = w[c].to_numpy()
             for i, (a, b) in enumerate(zip(gv, wv)):
-                ok = (math.isnan(a) and math.isnan(b)) or abs(a - b) <= 1e-6 * max(1, abs(b))
+                ok = (math.isnan(a) and math.isnan(b)) or (
+                    abs(a - b) <= TOL * max(1, abs(b))
+                )
                 assert ok, f"{name}.{c}[{i}]: {a} vs {b}"
         else:
             mismatch = (g[c].astype(str) != w[c].astype(str))

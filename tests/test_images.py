@@ -156,11 +156,10 @@ def test_external_decoder_real_formats_psnr():
 
 
 def test_phash_batch_bit_identical():
-    """phash64_batch / phash64_many must equal the scalar phash64 BIT FOR
-    BIT on this platform — the guard that batched BLAS gemm and batched
-    means round identically to the per-image path (if a platform ever
-    breaks this, the pipeline stays internally consistent but this test
-    flags the divergence)."""
+    """phash64_many must equal the scalar phash64 BIT FOR BIT on this
+    platform — the guard that batched BLAS gemm rounds identically to the
+    per-image path (if a platform ever breaks this, the pipeline stays
+    internally consistent but this test flags the divergence)."""
     import numpy as np
 
     from navgraph_osm_spark.sources.codec import phash64, phash64_many

@@ -528,3 +528,20 @@ def test_mismatched_way_tag_arrays_raise():
     block = bytes([0x0A, len(strtab)]) + strtab + bytes([0x12, len(group)]) + group
     with pytest.raises(ValueError, match="way 42"):
         pbf.parse_primitive_block(block)
+
+
+def test_mismatched_relation_member_arrays_raise():
+    """A Relation with 2 member roles and memids (f8, f9) but 1 member type
+    (f10) is malformed: decoding must name the relation and raise, not cut
+    the members to the shortest array."""
+    strtab = b"".join(bytes([0x0A, len(s)]) + s for s in (b"", b"from", b"to"))
+    rel = bytes(
+        [0x08, 7]  # id (f1) = 7
+        + [0x42, 0x02, 0x01, 0x02]  # roles_sid (f8, packed): from, to
+        + [0x4A, 0x02, 0x14, 0x02]  # memids (f9, packed sint64 deltas): 10, 11
+        + [0x52, 0x01, 0x01]  # types (f10, packed): WAY — one short
+    )
+    group = bytes([0x22, len(rel)]) + rel  # PrimitiveGroup.relations (f4)
+    block = bytes([0x0A, len(strtab)]) + strtab + bytes([0x12, len(group)]) + group
+    with pytest.raises(ValueError, match="relation 7"):
+        pbf.parse_primitive_block(block)

@@ -120,32 +120,12 @@ def test_tile_assignment_oracle(spark):
         assert got_cells == want, r["image_id"]
 
 
-def test_pip_join_carry_along_path(points, polygons):
-    """broadcast_polys=False (carry-along kernel) must equal the broadcast path."""
-    pts_df, _ = points
-    poly_df, _ = polygons
-    bc = {
-        (r["point_id"], r["poly_id"])
-        for r in point_in_polygon_join(
-            pts_df, poly_df, RES, broadcast_polys=True
-        ).collect()
-    }
-    carry = {
-        (r["point_id"], r["poly_id"])
-        for r in point_in_polygon_join(
-            pts_df, poly_df, RES, broadcast_polys=False
-        ).collect()
-    }
-    assert carry == bc
-    assert len(carry) > 0
-
-
 def test_pip_join_same_lat_different_lng_polygons(spark, points):
     """Two polygons with identical lat arrays but different lng arrays must
-    not be conflated by the carry-along kernel (regression: the kernel used
-    to group candidate rows by lat bytes only)."""
+    not be conflated by the refinement (regression: an earlier kernel
+    grouped candidate rows by lat bytes only)."""
     pts_df, pts_pdf = points
-    # triangles (non-rect → kernel path) in the same latitude row
+    # triangles (non-rect → ray-cast refinement) in the same latitude row
     tri = lambda lng0: [  # noqa: E731
         {"lat": 48.2, "lng": lng0},
         {"lat": 49.3, "lng": lng0 + 0.5},
@@ -156,23 +136,20 @@ def test_pip_join_same_lat_different_lng_polygons(spark, points):
                       {"poly_id": 1, "footprint": tri(2.4)}]),
         schema="poly_id long, footprint array<struct<lat:double,lng:double>>",
     )
-    for bcast in (True, False):
-        got = {
-            (r["point_id"], r["poly_id"])
-            for r in point_in_polygon_join(
-                pts_df, poly_df, RES, broadcast_polys=bcast
-            ).collect()
-        }
-        want = set()
-        for pid, lng0 in ((0, 1.6), (1, 2.4)):
-            fp = tri(lng0)
-            inside = points_in_polygon_np(
-                pts_pdf["lat"].to_numpy(), pts_pdf["lng"].to_numpy(),
-                np.array([p["lat"] for p in fp]), np.array([p["lng"] for p in fp]),
-            )
-            want |= {(int(i), pid) for i in pts_pdf["point_id"][inside]}
-        assert got == want, f"broadcast_polys={bcast}"
-        assert len(got) > 0
+    got = {
+        (r["point_id"], r["poly_id"])
+        for r in point_in_polygon_join(pts_df, poly_df, RES).collect()
+    }
+    want = set()
+    for pid, lng0 in ((0, 1.6), (1, 2.4)):
+        fp = tri(lng0)
+        inside = points_in_polygon_np(
+            pts_pdf["lat"].to_numpy(), pts_pdf["lng"].to_numpy(),
+            np.array([p["lat"] for p in fp]), np.array([p["lng"] for p in fp]),
+        )
+        want |= {(int(i), pid) for i in pts_pdf["point_id"][inside]}
+    assert got == want
+    assert len(got) > 0
 
 
 def test_pip_rect_fast_path_matches_kernel(spark, points):
@@ -185,7 +162,7 @@ def test_pip_rect_fast_path_matches_kernel(spark, points):
     ]
     r1 = r0 + [r0[0]]  # explicitly closed ring (5 points)
     r2 = list(reversed(r0))  # opposite winding
-    bowtie = [r0[0], r0[2], r0[1], r0[3]]  # NOT a rectangle: kernel path
+    bowtie = [r0[0], r0[2], r0[1], r0[3]]  # NOT a rectangle: ray cast
     poly_df = spark.createDataFrame(
         pd.DataFrame(
             [{"poly_id": i, "footprint": fp} for i, fp in enumerate([r0, r1, r2, bowtie])]
@@ -237,10 +214,9 @@ def test_knn_bruteforce_matches_numpy(points):
 
 def test_pip_join_multiring_holes(spark, points):
     """Multi-ring footprints (ring_offsets column): a donut and a two-shell
-    multipolygon, refined by ring-summed even-odd crossings.  Both kernel
-    paths (broadcast map and carry-along columns) must equal the numpy
-    oracle with the SAME ring splitting, and a point inside the hole must
-    never match."""
+    multipolygon, refined by ring-summed even-odd crossings.  The join
+    must equal the numpy oracle with the SAME ring splitting, and a point
+    inside the hole must never match."""
     pts_df, pdf = points
     rows = [
         {  # donut: outer box with a centered hole
@@ -290,14 +266,11 @@ def test_pip_join_multiring_holes(spark, points):
 
     want = _oracle()
     assert want, "fixture must produce hits"
-    for bcast in (True, False):
-        got = {
-            (r["point_id"], r["poly_id"])
-            for r in point_in_polygon_join(
-                pts_df, poly_df, RES, broadcast_polys=bcast
-            ).collect()
-        }
-        assert got == want, f"broadcast_polys={bcast}"
+    got = {
+        (r["point_id"], r["poly_id"])
+        for r in point_in_polygon_join(pts_df, poly_df, RES).collect()
+    }
+    assert got == want
     # hole exclusion: a point dead-center of poly 1's hole is not a hit
     probe = spark.createDataFrame(
         pd.DataFrame({"point_id": [99001, 99002],
@@ -1108,6 +1081,12 @@ def test_polygon_to_cells_center_mode(spark):
         {"poly_id": 3, "footprint": [
             {"lat": 50.0 + 5 * np.sin(t), "lng": 100.0 + 8 * np.cos(t)}
             for t in np.linspace(0, 2 * np.pi, 6, endpoint=False)]},
+        # 24-vertex star: more edges than the ray cast unrolls (16), so
+        # the last 8 go through its aggregate tail
+        {"poly_id": 4, "footprint": [
+            {"lat": 10.0 + r * np.sin(t), "lng": 20.0 + r * np.cos(t)}
+            for t, r in zip(np.linspace(0, 2 * np.pi, 24, endpoint=False),
+                            np.tile([3.0, 1.2], 12))]},
     ]
     df = spark.createDataFrame(
         pd.DataFrame(polys),
@@ -1134,6 +1113,7 @@ def test_polygon_to_cells_center_mode(spark):
                 np.array([x]), np.array([y]), res)[0])))
     assert got == want
     assert want, "fixture must fill cells"
+    assert any(pid == 4 for pid, _ in want), "the star must fill cells"
 
     # the sliver keeps ~O(perimeter) cells, far below its bbox covering
     n_sliver = sum(1 for pid, _ in got if pid == 2)
@@ -1406,10 +1386,9 @@ def test_compact_uncompact_cells(spark):
 
 
 def test_pip_expr_refinement_hof_tail_beyond_unroll(spark):
-    """Round-6: the default codegen refinement unrolls 16 edges and routes
-    longer footprints through a lazily-evaluated HOF tail — a 24-vertex
-    star polygon must refine identically to the numpy kernel through BOTH
-    the expr default and the python kernel path."""
+    """The codegen refinement unrolls 16 edges and routes longer
+    footprints through a lazily-evaluated HOF tail — a 24-vertex star
+    polygon must refine identically to the numpy kernel."""
     import numpy as np
     import pandas as pd
 
@@ -1441,15 +1420,8 @@ def test_pip_expr_refinement_hof_tail_beyond_unroll(spark):
         ),
         "poly_id long, footprint array<struct<lat:double,lng:double>>",
     )
-    got_expr = {
+    got = {
         r["point_id"]
         for r in point_in_polygon_join(pts_df, poly_df, res=6).collect()
     }
-    got_py = {
-        r["point_id"]
-        for r in point_in_polygon_join(
-            pts_df, poly_df, res=6, refine="python", broadcast_polys=True
-        ).collect()
-    }
-    assert got_expr == want
-    assert got_py == want
+    assert got == want
